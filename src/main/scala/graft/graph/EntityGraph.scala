@@ -361,9 +361,10 @@ object EntityGraph {
     // shrinking the adjacency (job launch + stage write is the whole
     // cost down here — and chains deeper than ~2 lose more to plan
     // growth and per-broadcast AQE jobs than they save in launches,
-    // measured in tools/KCoreProbe), while a genuinely big graph runs
-    // one staged round per job so the shrinking table is scanned once
-    // per peel and lineage stays flat.
+    // measured by stageEvery = 1/2/4 sweeps, 3 reps each, of kCore over
+    // gr7's co-supplier graph at sf0.1 on a 4-core host), while a
+    // genuinely big graph runs one staged round per job so the shrinking
+    // table is scanned once per peel and lineage stays flat.
     val small = degSum / 2 <= 2_000_000L
     // Observed-small fast path: the remaining subgraph is dimension-
     // sized (a thresholded projection, not the corpus), so the capped

@@ -77,10 +77,10 @@ object SketchOps {
       .orderBy(col("doc_id"))
   }
 
-  /** sk3: the count-min sketch maintained by a REAL Structured Streaming
-    * query over the events table (Complete-mode stateful agg, constant
-    * d×w state), probed for the top-20 heavy-hitter users. Drained with
-    * AvailableNow, so streamed == batch bit-for-bit and the batch SQL
+  /** sk3: the streaming count-min sketch (constant d×w cells per batch,
+    * see [[graft.streaming.SketchStream.countMinStreaming]]) drained once
+    * over the events table, probed for the top-20 heavy-hitter users. A
+    * one-batch drain equals the batch build bit-for-bit, so the batch SQL
     * twin is the oracle — streaming sketch maintenance sits in the same
     * correctness gate as everything else.
     */
@@ -161,18 +161,16 @@ object SketchOps {
       .orderBy(col("l_returnflag"))
   }
 
-  /** sk5: the HLL registers maintained by a REAL Structured Streaming
-    * query over the events table (constant group×64 max state, no dedup
-    * — see [[graft.streaming.SketchStream.hllStreaming]]), finished into
-    * per-event_type estimates next to the exact distinct-user count.
-    * AvailableNow drain ⇒ streamed registers == batch registers, so the
-    * batch SQL twin is the oracle.
+  /** sk5: the streaming HLL registers (constant group×64 max state, no
+    * dedup — see [[graft.streaming.SketchStream.hllStreaming]]) drained
+    * once over the events table, finished into per-event_type estimates
+    * next to the exact distinct-user count. A one-batch drain's registers
+    * == the batch registers, so the batch SQL twin is the oracle.
     */
   def sk5StreamHll(spark: SparkSession, dir: String): DataFrame = {
-    // staged: the finish self-joins the register table (grid ⋈ regs), and
-    // a memory-sink view reuses the same attribute ids on both sides —
-    // the stage write gives the second consumer fresh references (and the
-    // drained registers are ≤ groups×64 rows, so the write is trivial)
+    // staged: the finish self-joins the register table (grid ⋈ regs), so
+    // it has two consumers; the registers are ≤ groups×64 rows, so the
+    // write is trivial
     val regs = F.materialize(graft.streaming.SketchStream.hllStreaming(spark, dir))
     val est = Sketches.hllEstimateFromRegisters(regs, "event_type")
     Tables.events(spark, dir)

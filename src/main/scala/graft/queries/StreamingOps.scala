@@ -10,6 +10,9 @@ import graft.streaming.EventStream
 /** Streaming/incremental operators (SURVEY.md §2.9) and export round trips
   * (S9-S12), each oracle-checked: the streaming window agg must equal the
   * batch SQL twin; the CSV/JSON round trips must reproduce their source.
+  * The one-shot stream drains (st0, st5-st8) run as the batch plans of
+  * their stream bodies; the streaming spec proves each equal to the
+  * Structured Streaming execution of the same body.
   */
 object StreamingOps {
 
@@ -18,8 +21,8 @@ object StreamingOps {
     EventStream.windowAggBatch(Tables.events(spark, dir))
       .orderBy(col("window_ms"), col("event_type"))
 
-  // The same aggregation executed as a real Structured Streaming query
-  // (file source → watermark → window → memory sink, Trigger.AvailableNow).
+  // The same aggregation drained once as a watermarked Complete-mode
+  // stream (file source, Trigger.AvailableNow) — one batch, so its batch plan.
   def st0StreamWindow(spark: SparkSession, dir: String): DataFrame =
     EventStream.windowAggStreaming(spark, dir)
       .orderBy(col("window_ms"), col("event_type"))
@@ -30,12 +33,12 @@ object StreamingOps {
       .orderBy(col("user_id"), col("session_seq"))
 
   // Stream-stream interval join (clicks × same-user errors within the
-  // trailing 2 hours), both sides watermarked — bounded join state.
+  // trailing 2 hours) drained once — the inner join of the one batch.
   def st5IntervalJoin(spark: SparkSession, dir: String): DataFrame =
     EventStream.intervalJoinStreaming(spark, dir)
       .orderBy(col("click_id"), col("err_id"))
 
-  // Stateful flatMapGroupsWithState sessionization drained against the
+  // Stateful flatMapGroupsWithState sessionization drained once over the
   // static table — closed sessions only; oracle = batch sessions minus
   // each user's final (still-open) session.
   def st6StreamSessionize(spark: SparkSession, dir: String): DataFrame =
@@ -101,7 +104,7 @@ object StreamingOps {
     }
     val base = graft.functions.F.stageTempPath(spark, "neardup-q")
     // the single-file uncapped feed drains in ONE batch, so the batch
-    // read of the same staged file is the legal DrainRewrite twin
+    // read of the same staged file is a legal batch twin
     graft.streaming.NearDupStream.run(spark,
       spark.readStream.schema(docs.schema).parquet(feed),
       "doc_id", "text", s"$base/state", s"$base/out",

@@ -5,15 +5,28 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
 
-/** Streaming operators over the events table: watermarked tumbling-window
-  * aggregation (Structured Streaming), and sessionization both as a batch
-  * gaps-and-islands computation and as a stateful
-  * `flatMapGroupsWithState` stream (SURVEY.md §2.9 — the reference is
-  * micro-batch incremental; these are the Spark-native streaming forms of
-  * its ST1/ST3 machinery).
+/** Streaming operators over the events table: tumbling-window
+  * aggregation, stream-static enrichment, a stream-stream interval join,
+  * and sessionization both as a batch gaps-and-islands computation and
+  * as stateful `flatMapGroupsWithState` streams (SURVEY.md §2.9 — the
+  * reference is micro-batch incremental; these are the Spark-native
+  * streaming forms of its ST1/ST3 machinery).
+  *
+  * One-shot drains (st0, st5, st6, st7, st8) drain the static events
+  * table once. An AvailableNow drain of an uncapped file source over a
+  * fresh checkpoint reads the whole table in ONE micro-batch, so it is a
+  * batch read, and each drain query runs as a batch plan. st0, st5 and
+  * st8 share one body with their stream form: the body runs unchanged on
+  * a streaming DataFrame, and the streaming spec drains it as a real
+  * Structured Streaming query (file source, AvailableNow, memory sink)
+  * and proves the batch plan row- and schema-equal to that execution.
+  * st6 and st7 are window-function batch plans; their stream forms are
+  * the separate `flatMapGroupsWithState` operators
+  * [[sessionizeStreaming]] and [[sessionizeStreamingEventTime]], which
+  * the spec drains and proves equal to them on generated event sets.
   *
   * Scale: the windowed aggregate is keyed on (window, event_type) — state
   * size is windows × types, independent of input volume; the watermark
@@ -22,245 +35,86 @@ import org.apache.spark.sql.types.DecimalType
   */
 object EventStream {
 
-  /** The shared windowed-aggregation body — ONE definition feeding the
-    * batch form, the streaming plan, and the drain-rewrite twin, so the
-    * three can't drift. Output: (w struct, event_type, n, total).
+  /** Tumbling 1-hour windows per event type: (window_ms, event_type, n,
+    * total). As a stream the same body runs watermarked in Complete mode.
     */
-  private def windowAggOf(events: DataFrame): DataFrame =
+  def windowAggBatch(events: DataFrame): DataFrame =
     events
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total"))
-
-  /** Tumbling 1-hour windows per event type — batch form. */
-  def windowAggBatch(events: DataFrame): DataFrame =
-    windowAggOf(events)
       .select(unix_millis(col("w.start")).as("window_ms"), col("event_type"),
         col("n"), col("total"))
 
-  /** The same aggregation as a real Structured Streaming query: file
-    * source → watermark → windowed agg → memory sink, drained with
-    * Trigger.AvailableNow. Returns the finished result as a DataFrame.
-    *
-    * ONE-SHOT drains take the [[DrainRewrite]] fast path (same flag and
-    * preconditions as st5/sk3): a COMPLETE-mode aggregation drained from
-    * a fresh checkpoint in a single AvailableNow batch emits exactly the
-    * aggregation of that one batch — Complete mode outputs the full
-    * state every batch, the single batch IS the whole table, and the
-    * watermark never gates Complete output (it only evicts state after
-    * emission). count is exact and the DECIMAL(18,2) sum is exact (order
-    * never changes a decimal sum), so the twin is bit-identical. The
-    * stateful plan below runs unchanged for resumable deployments (prior
-    * Spark state, rate-capped sources, or the flag off) — a drain there
-    * pays the per-batch state-store commit machinery the rewrite exists
-    * to skip.
+  /** st0: the window aggregation drained once as a Complete-mode stream.
+    * Complete mode emits the full state every batch and the watermark
+    * never gates its output, so the one batch's result is
+    * [[windowAggBatch]] of the table; count and the DECIMAL(18,2) sum are
+    * order-exact, so the batch plan is bit-identical.
     */
-  def windowAggStreaming(spark: SparkSession, dir: String): DataFrame = {
-    val project = (df: DataFrame) =>
-      df.select(unix_millis(col("w.start")).as("window_ms"), col("event_type"),
-        col("n"), col("total"))
-    // the checkpoint below is a THROWAWAY UUID no other run can observe,
-    // so there is no marker to claim/commit and nothing durable is
-    // emitted (the st9 precedent): the flag alone picks the plan, and
-    // the twin returns lazily — recompute is pure. The twin plans on the
-    // PARENT session (cached table schema, no clone): a batch aggregate
-    // needs no state-store sizing. The uncapped file source drains in
-    // one batch (the singleBatch precondition).
-    if (DrainRewrite.enabled(spark))
-      return project(windowAggOf(graft.Tables.events(spark, dir)))
-    // state partitioning sized to KEY cardinality (windows × event types
-    // — dozens) on a query-scoped session clone, never by mutating the
-    // shared session conf (see [[StreamConf.streamSession]])
-    val ss = StreamConf.streamSession(spark)
-    val batch = ss.read.parquet(s"$dir/events.parquet")
-    val ckpt = graft.functions.F.stageTempPath(ss, "ckpt")
-    val src = ss.readStream
-      .schema(batch.schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    val events = graft.Tables.normalizeTs(src)
-    val agg = windowAggOf(events.withWatermark("ts", "1 hour"))
-    val name = s"graft_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(name)
-      // checkpoint on the session stage root (tmpfs under a local
-      // master): state-store commits are many tiny files and this
-      // host's disk has bursty metadata latency; a cluster deployment
-      // sets spark.graft.stage.dir to shared storage
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    project(ss.table(name))
+  def windowAggStreaming(spark: SparkSession, dir: String): DataFrame =
+    windowAggBatch(graft.Tables.events(spark, dir))
+
+  /** STREAM-STATIC enrichment body: events joined to the customer→nation
+    * dimension (a static broadcastable table) and aggregated per nation —
+    * the standard continuous-enrichment shape (fact stream × dimension
+    * snapshot). The join is STATELESS: each micro-batch hash-joins
+    * against the broadcast dimension, so the only streaming state is the
+    * constant #nations aggregate, and the broadcast keeps enrichment off
+    * the shuffle entirely.
+    */
+  private[streaming] def enrichAggOf(spark: SparkSession, dir: String,
+      events: DataFrame): DataFrame = {
+    val dim = broadcast(
+      graft.Tables.customer(spark, dir)
+        .select(col("c_custkey").as("user_id"), col("c_nationkey"))
+        .join(graft.Tables.nation(spark, dir),
+          col("c_nationkey") === col("n_nationkey"))
+        .select(col("user_id"), col("n_name")))
+    events.join(dim, Seq("user_id"))
+      .groupBy(col("n_name"))
+      .agg(count(lit(1)).as("n"),
+        sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total"))
   }
 
-  /** STREAM-STATIC enrichment join: the event stream joined to the
-    * customer→nation dimension (a static broadcastable table) and
-    * aggregated per nation — the standard continuous-enrichment shape
-    * (fact stream × dimension snapshot). The join itself is STATELESS:
-    * each micro-batch hash-joins against the broadcast dimension, so the
-    * only streaming state is the constant #nations aggregate — at
-    * 100 TB/day the dimension broadcast is what keeps enrichment off the
-    * shuffle entirely. Drained with AvailableNow ⇒ equals the batch join
-    * and the SQL twin is the oracle.
+  /** st8: [[enrichAggOf]] drained once. The join is stateless and the
+    * Complete-mode aggregate of the one batch is the batch aggregate
+    * (count and the decimal sum are order-exact).
     */
-  def streamStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
-    // the enrichment body shared by the streaming plan and the
-    // drain-rewrite twin — one definition, no drift
-    def enrichAggOf(session: SparkSession, events: DataFrame): DataFrame = {
-      val dim = broadcast(
-        graft.Tables.customer(session, dir)
-          .select(col("c_custkey").as("user_id"), col("c_nationkey"))
-          .join(graft.Tables.nation(session, dir),
-            col("c_nationkey") === col("n_nationkey"))
-          .select(col("user_id"), col("n_name")))
-      events.join(dim, Seq("user_id"))
-        .groupBy(col("n_name"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total"))
-    }
-    // ONE-SHOT drains take the [[DrainRewrite]] fast path: the join is
-    // STATELESS (per-batch hash join against the broadcast dimension) and
-    // the Complete-mode aggregate over a fresh-checkpoint single-batch
-    // drain equals the batch aggregate exactly (the one batch is the
-    // whole table; count and the decimal sum are order-exact). The
-    // checkpoint below is a throwaway UUID (st9 precedent: flag-only
-    // gate, no marker, lazy twin on the PARENT session — cached schemas,
-    // no clone); the uncapped file source drains in one batch.
-    if (DrainRewrite.enabled(spark))
-      return enrichAggOf(spark, graft.Tables.events(spark, dir))
-    val ss = StreamConf.streamSession(spark)
-    val batch = ss.read.parquet(s"$dir/events.parquet")
-    val ckpt = graft.functions.F.stageTempPath(ss, "ckpt")
-    val src = graft.Tables.normalizeTs(
-      ss.readStream
-        .schema(batch.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
-    val agg = enrichAggOf(ss, src)
-    val name = s"graft_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(name)
-  }
+  def streamStaticEnrich(spark: SparkSession, dir: String): DataFrame =
+    enrichAggOf(spark, dir, graft.Tables.events(spark, dir))
 
-  /** Click/error projections shared by the streaming plan and its batch
-    * drain twin — one definition, so the two can't drift.
+  /** Click/error projections and the interval condition of the
+    * stream-stream join — one definition for the batch plan and the
+    * watermarked stream.
     */
-  private def clicksOf(events: DataFrame): DataFrame =
+  private[streaming] def clicksOf(events: DataFrame): DataFrame =
     events.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("cts"))
-  private def errorsOf(events: DataFrame): DataFrame =
+  private[streaming] def errorsOf(events: DataFrame): DataFrame =
     events.filter(col("event_type") === "error")
       .select(col("event_id").as("err_id"), col("user_id").as("err_user"),
         col("ts").as("ets"))
-  private def intervalJoinCond: Column =
+  private[streaming] def intervalJoinCond: Column =
     col("user_id") === col("err_user") &&
       col("ets") >= col("cts") - expr("INTERVAL 2 HOURS") &&
       col("ets") <= col("cts")
-  private def intervalJoinProject(joined: DataFrame): DataFrame =
+  private[streaming] def intervalJoinProject(joined: DataFrame): DataFrame =
     joined.select(col("click_id"), col("err_id"),
       unix_millis(col("cts")).as("click_ms"),
       unix_millis(col("ets")).as("err_ms"))
 
-  /** Stream-stream INTERVAL JOIN: clicks joined to the same user's
-    * errors from the preceding 2 hours, both sides watermarked so the
-    * join state is bounded — Spark buffers each side only for
-    * (watermark + interval), never the whole stream. This is the
-    * streaming twin of [[graft.ops.TemporalJoins]]: enrichment that at
-    * 100 TB/day runs continuously instead of as nightly batch. Drained
-    * with Trigger.AvailableNow against the static events table, so the
-    * result is deterministic and oracle-checkable against the batch SQL
-    * interval join.
-    *
-    * ONE-SHOT drains take the [[DrainRewrite]] fast path (default-on,
-    * `spark.graft.stream.drainRewrite`): a fresh-checkpoint single-batch
-    * AvailableNow drain of an INNER join equals the batch join exactly
-    * (every match forms inside the one batch; the watermark only evicts
-    * state afterwards), and the round-12 DrainProfile decomposition
-    * showed the stateful drain's cost at ×100 IS the state-store insert
-    * of the full in-window set — buffering 1 GB of rows to read them
-    * back once. The rewrite runs the same projections/condition over the
-    * batch read, materializes, and marks the checkpoint spent; resumable
-    * deployments (prior Spark state, rate-capped sources, or the flag
-    * off) keep the stateful plan below.
+  /** st5: clicks joined to the same user's errors from the preceding
+    * 2 hours. As a stream both sides are watermarked so Spark buffers each
+    * side only for (watermark + interval) — the streaming twin of
+    * [[graft.ops.TemporalJoins]]. Drained once, an INNER join forms every
+    * match inside the one batch (the watermark only evicts state
+    * afterwards), so the drain equals this batch join exactly.
     */
-  def intervalJoinStreaming(spark: SparkSession, dir: String,
-      checkpoint: Option[String] = None): DataFrame = {
-    // join state grows with the data (both sides buffered for
-    // watermark+interval), so size the state stores to the source
-    val ss = StreamConf.streamSessionFor(spark, dir)
-    val name = s"graft_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(
-      graft.functions.F.stageTempPath(ss, "ckpt"))
-    val batch = ss.read.parquet(s"$dir/events.parquet")
-    // the file source below sets no maxFilesPerTrigger/maxBytesPerTrigger,
-    // so AvailableNow drains it in ONE data batch — the singleBatch
-    // precondition the rewrite's exactness argument needs
-    DrainRewrite.decide(spark, ss, ckpt, singleBatch = true) match {
-      case DrainRewrite.BatchDrain =>
-        return DrainRewrite.runClaimed(ss, ckpt, s"$dir/events.parquet") {
-          val ev = graft.Tables.normalizeTs(batch)
-          graft.functions.F.materialize(intervalJoinProject(
-            clicksOf(ev).join(errorsOf(ev), intervalJoinCond)))
-        }
-      case DrainRewrite.Stateful => ()
-    }
-    // An INNER stream-stream join emits each match in the micro-batch
-    // where it forms; the trailing no-data batch only advances the
-    // watermark to evict state — for a drain that is a full extra
-    // commit round over 4 state stores × partitions with no new output.
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    def src(): DataFrame = graft.Tables.normalizeTs(
-      ss.readStream
-        .schema(batch.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
-    val clicks = clicksOf(src()).withWatermark("cts", "1 hour")
-    val errors = errorsOf(src()).withWatermark("ets", "1 hour")
-    val joined = clicks.join(errors, intervalJoinCond)
-    // Guard for the noDataMicroBatches=false above: that setting is safe
-    // ONLY while no output here is watermark-GATED (an inner join emits
-    // matches in the micro-batch where they form; the watermark only
-    // evicts state). If this query ever gains an append-mode aggregate,
-    // a dropDuplicates, or an outer join arm, its final rows would wait
-    // on a no-data batch that never comes — fail loudly at plan time
-    // instead of silently dropping them.
-    joined.queryExecution.analyzed.foreach {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
-        throw new IllegalStateException(
-          s"watermark-gated aggregate under noDataMicroBatches=false: $a")
-      case d: org.apache.spark.sql.catalyst.plans.logical.Deduplicate =>
-        throw new IllegalStateException(
-          s"watermark-gated dedupe under noDataMicroBatches=false: $d")
-      case d: org.apache.spark.sql.catalyst.plans.logical.DeduplicateWithinWatermark =>
-        throw new IllegalStateException(
-          s"watermark-gated dedupe under noDataMicroBatches=false: $d")
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join
-          if j.joinType != org.apache.spark.sql.catalyst.plans.Inner =>
-        throw new IllegalStateException(
-          s"non-inner stream join under noDataMicroBatches=false: ${j.joinType}")
-      case _ => ()
-    }
-    val q = joined.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    DrainMetrics.capture(q)
-    intervalJoinProject(ss.table(name))
+  def intervalJoinStreaming(spark: SparkSession, dir: String): DataFrame = {
+    val ev = graft.Tables.events(spark, dir)
+    intervalJoinProject(clicksOf(ev).join(errorsOf(ev), intervalJoinCond))
   }
 
   /** Batch sessionization: gaps-and-islands with a session break when the
@@ -289,20 +143,20 @@ object EventStream {
   case class SessionOut(user_id: Long, session_seq: Long, n_events: Long,
       start_ms: Long, end_ms: Long)
 
-  /** Drain-rewrite twin of the st6 single-batch drain: every session
-    * except each user's LAST. Exactness: a fresh-checkpoint AvailableNow
-    * drain with no source caps feeds the whole table to
-    * [[sessionizeStreaming]] as ONE batch, so each user's handler sees
-    * all their events, sorts by (ts, event_id) — the same total order as
-    * [[sessionizeBatch]]'s window — and emits every gap-closed session
-    * while the final one stays in state (NoTimeout: the trailing no-data
-    * batch fires no timeouts and emits nothing). Column order/types match
-    * the memory sink's [[SessionOut]] encoding (user_id/event_id are
-    * int64 in the source; a narrower source would be upcast by `.as[Ev]`,
-    * so the twin upcasts identically).
+  /** st6: [[sessionizeStreaming]] drained once over the events table —
+    * every session except each user's LAST. Exactness: the one batch
+    * gives each user's handler all their events, sorted by (ts,
+    * event_id) — the same total order as [[sessionizeBatch]]'s window —
+    * and it emits every gap-closed session while the final one stays in
+    * state (NoTimeout: the trailing no-data batch fires no timeouts and
+    * emits nothing). Column order/types match the stream's [[SessionOut]]
+    * encoding (user_id/event_id are int64 in the source; a narrower
+    * source would be upcast by `.as[Ev]`, so this plan upcasts
+    * identically).
     */
-  private[streaming] def closedSessionsBatch(events: DataFrame,
+  def sessionizeStreamingFromDir(spark: SparkSession, dir: String,
       gapMinutes: Int): DataFrame = {
+    val events = graft.Tables.events(spark, dir)
     val byUser = Window.partitionBy(col("user_id"))
     sessionizeBatch(events.select(col("user_id").cast("long").as("user_id"),
         col("ts"), col("event_id").cast("long").as("event_id")), gapMinutes)
@@ -310,77 +164,6 @@ object EventStream {
       .filter(col("session_seq") < col("__mx"))
       .select(col("user_id"), col("session_seq"), col("n_events"),
         col("start_ms"), col("end_ms"))
-  }
-
-  /** Drain-rewrite twin of the st7 single-batch drain: the sessions with
-    * `end + gap <= max event time`. Exactness: the data batch folds every
-    * event with the watermark still at its initial value (nothing
-    * closes), and the final AvailableNow batch runs with watermark
-    * `max(ts) − 0` (delay 0, ms-floored — `unix_millis` floors the same
-    * way the engine's event-time stats do); event-time timeouts fire for
-    * every group whose earliest open interval is closable, and each
-    * handler emits exactly its intervals with `end + gap <= wm`. The
-    * interval-merge fold is order-independent (1-D union under
-    * within-gap adjacency), so the folded intervals ARE the batch
-    * gaps-and-islands sessions. Output column order/types match the
-    * memory sink's [[SessionWin]] encoding.
-    */
-  private[streaming] def timedOutSessionsBatch(events: DataFrame,
-      gapMinutes: Int): DataFrame = {
-    val gapMs = gapMinutes * 60L * 1000
-    val ev = events.select(col("user_id").cast("long").as("user_id"),
-      col("ts"), col("event_id").cast("long").as("event_id"))
-    val wm = ev.agg(max(unix_millis(col("ts"))).as("__wm"))
-    sessionizeBatch(ev, gapMinutes)
-      .crossJoin(broadcast(wm)) // 1-row broadcast, never a real cartesian
-      .filter(col("end_ms") + lit(gapMs) <= col("__wm"))
-      .select(col("user_id"), col("n_events"), col("start_ms"), col("end_ms"))
-  }
-
-  /** Drained file-source form of [[sessionizeStreaming]]: the stateful
-    * flatMapGroupsWithState sessionizer run as a real streaming query
-    * over the events table and collected from the memory sink. Emits
-    * CLOSED sessions only — each user's final session is still open in
-    * state when the stream drains — so the oracle twin is the batch
-    * sessionization minus every user's last session. Deterministic:
-    * AvailableNow with no file/byte trigger cap processes the table in
-    * one micro-batch, and the handler sorts each user's events by
-    * (ts, event_id) before folding.
-    */
-  def sessionizeStreamingFromDir(spark: SparkSession, dir: String,
-      gapMinutes: Int): DataFrame = {
-    // ONE-SHOT drains take the [[DrainRewrite]] fast path: see
-    // [[closedSessionsBatch]] for the exactness argument. The stateful
-    // drain's cost at scale is the per-user state-store insert of the
-    // full user set, read back once — the same pure-drain waste st5's
-    // rewrite removes. Resumable deployments (flag off) keep the
-    // stateful plan. Throwaway UUID checkpoint (st9 precedent: flag-only
-    // gate, no marker, lazy twin on the PARENT session); uncapped file
-    // source ⇒ one data batch.
-    if (DrainRewrite.enabled(spark))
-      return closedSessionsBatch(graft.Tables.events(spark, dir), gapMinutes)
-    // per-user session state: user cardinality grows with the corpus
-    val ss = StreamConf.streamSessionFor(spark, dir)
-    import ss.implicits._
-    val batch = ss.read.parquet(s"$dir/events.parquet")
-    val ckpt = graft.functions.F.stageTempPath(ss, "ckpt")
-    val src = graft.Tables.normalizeTs(
-      ss.readStream
-        .schema(batch.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
-    val out = sessionizeStreaming(
-      src.select(col("user_id"), col("ts"), col("event_id")).as[Ev], gapMinutes)
-    val name = s"graft_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = out.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(name)
   }
 
   /** One open session interval per user: [start, end] with its event
@@ -461,42 +244,30 @@ object EventStream {
       }
   }
 
-  /** Drained file-source driver for [[sessionizeStreamingEventTime]] —
-    * same harness shape as [[sessionizeStreamingFromDir]]. AvailableNow
-    * runs the data batch (watermark still at its initial value), then
-    * the engine schedules a final batch because the advanced watermark
-    * crossed pending event-time timeouts — closed sessions flush there.
+  /** st7: [[sessionizeStreamingEventTime]] drained once over the events
+    * table — the sessions with `end + gap <= max event time`. Exactness:
+    * the data batch folds every event with the watermark still at its
+    * initial value (nothing closes); the engine then runs a final batch
+    * with watermark `max(ts) − 0` (delay 0, ms-floored — `unix_millis`
+    * floors the same way the engine's event-time stats do), where
+    * event-time timeouts fire for every group whose earliest open
+    * interval is closable and each handler emits exactly its intervals
+    * with `end + gap <= wm`. The interval-merge fold is order-independent
+    * (1-D union under within-gap adjacency), so the folded intervals ARE
+    * the batch gaps-and-islands sessions. Column order/types match the
+    * stream's [[SessionWin]] encoding.
     */
   def sessionizeStreamingEventTimeFromDir(spark: SparkSession, dir: String,
       gapMinutes: Int): DataFrame = {
-    // ONE-SHOT drains take the [[DrainRewrite]] fast path: see
-    // [[timedOutSessionsBatch]] for the exactness argument. Same scale
-    // rationale as st6 above; throwaway UUID checkpoint (st9 precedent:
-    // flag-only gate, no marker, lazy twin on the PARENT session);
-    // uncapped file source ⇒ one data batch.
-    if (DrainRewrite.enabled(spark))
-      return timedOutSessionsBatch(graft.Tables.events(spark, dir), gapMinutes)
-    val ss = StreamConf.streamSessionFor(spark, dir)
-    import ss.implicits._
-    val batch = ss.read.parquet(s"$dir/events.parquet")
-    val ckpt = graft.functions.F.stageTempPath(ss, "ckpt")
-    val src = graft.Tables.normalizeTs(
-      ss.readStream
-        .schema(batch.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
-    val out = sessionizeStreamingEventTime(
-      src.select(col("user_id"), col("ts"), col("event_id")).as[Ev], gapMinutes)
-    val name = s"graft_stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = out.writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(name)
+    val gapMs = gapMinutes * 60L * 1000
+    val ev = graft.Tables.events(spark, dir)
+      .select(col("user_id").cast("long").as("user_id"),
+        col("ts"), col("event_id").cast("long").as("event_id"))
+    val wm = ev.agg(max(unix_millis(col("ts"))).as("__wm"))
+    sessionizeBatch(ev, gapMinutes)
+      .crossJoin(broadcast(wm)) // 1-row broadcast, never a real cartesian
+      .filter(col("end_ms") + lit(gapMs) <= col("__wm"))
+      .select(col("user_id"), col("n_events"), col("start_ms"), col("end_ms"))
   }
 
   /** Streaming exact dedupe for continuous ingest: duplicate records
@@ -519,8 +290,8 @@ object EventStream {
     * Per-key memory bound — read before using on a continuous stream:
     * the ordinal semantics require a total event order per user, so each
     * invocation SORTS the user's micro-batch (`evs.toSeq.sortBy`) —
-    * memory is O(user's events in ONE micro-batch). That is fine for the
-    * drained AvailableNow form (this operator's gate) and for
+    * memory is O(user's events in ONE micro-batch). That is fine for a
+    * one-shot AvailableNow drain (st6's proof in the streaming spec) and for
     * micro-batches bounded by trigger interval × per-user rate, but a
     * bot-grade key in a huge batch pays O(batch) memory. For continuous
     * deployments prefer [[sessionizeStreamingEventTime]] (st7): it folds

@@ -28,20 +28,17 @@ import graft.dedupe.Dedupe
   * (state first, output second, marker last, reconcile on start, lake
   * lock for the run).
   *
-  * One-shot drains take the [[DrainRewrite]] fast path: unlike st5/sk3,
-  * the exactly-once commit IS this operator's product, but the protocol
-  * lives entirely in [[ExactlyOnceBatches]] — the Spark checkpoint here
-  * is a throwaway per-run UUID path (crash recovery is the
-  * state/output/marker reconcile, never a stream resume). So a
-  * single-batch drain can run [[processBatch]] — the SAME function the
-  * foreachBatch sink calls, same batch key, same state-first/output/
-  * marker write order — directly on the batch source, under the same
-  * lake lock and reconcile. Equality is structural (one code path), the
-  * torn-batch recovery story is byte-identical, and the rewrite sheds
-  * only the stream lifecycle + the micro-batch staging round-trip.
-  * Callers declare `singleBatch` (only they know their source options);
-  * multi-batch feeds keep the stateful plan because cross-batch state
-  * collisions are the semantics.
+  * One-shot drains: a caller whose feed drains in ONE AvailableNow batch
+  * (an uncapped source) passes its batch read as `batchTwin`, and the
+  * drain runs [[processBatch]] — the SAME function the foreachBatch sink
+  * calls, same batch key, same state-first/output/marker write order —
+  * directly on it, under the same lake lock and reconcile. The Spark
+  * checkpoint is a throwaway per-run path (crash recovery is the
+  * state/output/marker reconcile, never a stream resume), so equality is
+  * structural (one code path) and the torn-batch recovery story is
+  * byte-identical; the twin sheds only the stream lifecycle and the
+  * micro-batch staging round-trip. Multi-batch feeds pass no twin:
+  * cross-batch state collisions are their semantics.
   *
   * Documents shorter than the shingle width yield no bands: they are
   * admitted but never recorded — near-dup semantics need at least one
@@ -55,7 +52,7 @@ object NearDupStream {
     * output second, marker last ([[ExactlyOnceBatches]]) and returns the
     * admitted-row count. Both the foreachBatch sink and the one-shot
     * batch twin run EXACTLY this function — that identity is the
-    * rewrite's exactness argument.
+    * twin's exactness argument.
     */
   private def processBatch(spark: SparkSession, batch: DataFrame,
       batchKey: String, idCol: String, textCol: String,
@@ -106,9 +103,9 @@ object NearDupStream {
 
   /** Drain `docs` through the near-dup gate. `batchTwin` is the batch
     * read of the same source — supplied by callers whose feed drains in
-    * ONE AvailableNow batch (uncapped source); when present and the
-    * [[DrainRewrite]] flag allows, the drain executes [[processBatch]]
-    * directly on it instead of spinning up a stream.
+    * ONE AvailableNow batch (uncapped source); when present, the drain
+    * executes [[processBatch]] directly on it instead of spinning up a
+    * stream.
     */
   def run(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
       stateDir: String, outDir: String,
@@ -120,13 +117,10 @@ object NearDupStream {
     graft.lake.FsOps.mkdirs(fs, statePath)
     graft.lake.Locks.withLock(fs, statePath) {
     ExactlyOnceBatches.reconcile(spark, stateDir, outDir)
-    // the twin path consults only the FLAG — no checkpoint marker
-    // protocol. The checkpoint here is a throwaway per-run UUID nobody
-    // else can observe, so a claim would protect nothing: double-drain
-    // safety is the lake lock above (one drain per state dir at a time)
-    // and torn-batch safety is ExactlyOnceBatches' reconcile/commit.
-    val twin = batchTwin.filter(_ => DrainRewrite.enabled(spark))
-    twin match {
+    // double-drain safety is the lake lock above (one drain per state
+    // dir at a time); torn-batch safety is ExactlyOnceBatches'
+    // reconcile/commit — on both paths
+    batchTwin match {
       case Some(batch) =>
         // same function, same batch key as the stream's first batch,
         // same protocol writes — see class doc; a crash mid-batch is

@@ -118,24 +118,18 @@ out = {
     'streaming_drain_note': (
         'st5/sk3 are streaming drains whose batch twins (rj1/aj1, sk1) '
         'are IN this query set, so the parity claim is measured per '
-        'factor. One-shot drains take the DrainRewrite fast path (round '
-        '13; graft.streaming.DrainRewrite, default-on, '
-        'spark.graft.stream.drainRewrite): a fresh-checkpoint '
+        'factor. One-shot drains run as batch plans: a fresh-checkpoint '
         'SINGLE-batch AvailableNow drain of an inner stream-stream join '
-        '(or a linear sketch aggregate) provably equals its batch twin, '
-        'so the drain executes the batch plan and marks the checkpoint '
-        'spent; prior Spark state, rate-capped multi-batch sources, or '
-        'the flag off keep the stateful plan, whose exactly-once resume '
-        'is untouched and spec-gated for row+schema equality with the '
-        'rewrite. Round 14 measurements: at x100 st5 runs 1.99 s wall, '
+        '(or a linear sketch aggregate) is a batch read, so it runs its '
+        'batch plan; DrainRewriteSpec proves that plan row+schema equal '
+        'to the Structured Streaming execution of the same body. '
+        'Round 14 measurements: at x100 st5 runs 1.99 s wall, '
         'INSIDE batch twin rj1\'s band (2.13 s, 0.30x), and sk3 runs '
         '2.42 s, FASTER than batch twin sk1 (2.76 s, 1.44x). The '
         'residual ratios (st5 3.2x, sk3 4.4x at x100) are ORACLE-shape '
         'artifacts, not engine cost: st5/sk3 happen to have sub-second '
         'DuckDB twins (0.63 s / 0.55 s at x100) where rj1/sk1 oracles '
-        'take 7.2 s / 1.9 s for the same-band Spark work. The stateful '
-        'floor for resumable deployments stays metrics-documented via '
-        'graft.tools.DrainProfile.'),
+        'take 7.2 s / 1.9 s for the same-band Spark work.'),
     'merge_form_note': (
         'ROUND 14: A1 merge is deliberately the one-pass WINDOW form. '
         'The skew-safe aggregation alternative (per-id min_by + '
