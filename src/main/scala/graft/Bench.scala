@@ -185,55 +185,11 @@ object Bench {
     // unparseable. So: the COMPLETE per-query metrics go to a file next to the
     // build, and stdout carries a short self-contained JSON line (total + the
     // slowest queries + a pointer to the file) guaranteed to fit the window.
+    // A per-round history copy is the same run with
+    // SPARK_GRAFT_BENCH_OUT=BENCH_full_r<N>.json (the file carries hot_host).
     val outFile = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json"))
     java.nio.file.Files.write(outFile, (fullLine + "\n").getBytes("UTF-8"))
-    // ALSO drop a round-stamped copy next to the driver's artifacts so
-    // per-query history survives whoever runs last (BENCH_full.json is a
-    // latest-run-wins scratch file). Stamping is OPT-IN via
-    // SPARK_GRAFT_ROUND: round 12's infer-from-BENCH_r{N} guess stamped
-    // ANY full-suite run (a judge session produced a spurious next-round
-    // file), so now only a run that declares its round — the builder's
-    // end-of-round bench — writes history; judge/dev runs write only
-    // SPARK_GRAFT_BENCH_OUT. Full-suite at the round SF only, so a
-    // filtered profiling loop or small-sf smoke can't stamp a partial or
-    // wrong-scale map even with the round set.
-    val roundSf = sys.env.getOrElse("SPARK_GRAFT_ROUND_SF", "sf0.1")
-    val roundEnv = sys.env.get("SPARK_GRAFT_ROUND").map(_.trim).filter(_.nonEmpty)
-    // signal BOTH skip directions: an end-of-round run that forgot the
-    // env would otherwise silently stop the per-query history
-    if (roundEnv.isEmpty && only.isEmpty && sfDir.contains(roundSf))
-      System.err.println(
-        "[bench] SPARK_GRAFT_ROUND unset — no round-stamped history copy " +
-          "(set it on the end-of-round full-suite run)")
-    roundEnv
-      .foreach { round =>
-        // the value is interpolated into the artifact filename — a stray
-        // space/slash would write a misplaced file instead of history,
-        // so fail loudly like the other stamp diagnostics
-        if (!round.matches("\\d+"))
-          throw new IllegalArgumentException(
-            s"SPARK_GRAFT_ROUND must be a round number (digits only), got '$round'")
-        if (only.isEmpty && sfDir.contains(roundSf)) {
-          // hot-host runs STILL stamp (refusing would lose the round's
-          // per-query history entirely) but the artifact carries
-          // hot_host:true in its calibration, and the run says so out
-          // loud — a cross-round total comparison must check that flag
-          if (hotHost) System.err.println(
-            s"[bench] HOT HOST: calibration probe ${fmt(probeMin)}s > " +
-              s"1.5x quiet reference ${fmt(QuietProbeSec)}s — this " +
-              "round-stamped total is not comparable to quiet-host rounds")
-          try java.nio.file.Files.write(
-            java.nio.file.Paths.get(s"BENCH_full_r$round.json"),
-            (fullLine + "\n").getBytes("UTF-8"))
-          catch {
-            case e: java.io.IOException =>
-              System.err.println(s"[bench] round-stamped artifact write failed: $e")
-          }
-        } else System.err.println(
-          s"[bench] SPARK_GRAFT_ROUND=$round set but run is " +
-            s"${if (only.nonEmpty) "filtered" else s"not at $roundSf"} — no stamp")
-      }
     // "queries" here is the slowest-10 subset so the line keeps the driver's
     // expected shape without outgrowing the window; the complete map (and
     // the per-query spread) is in the file named by "queries_file".

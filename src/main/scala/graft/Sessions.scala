@@ -31,10 +31,9 @@ object Sessions {
       // local box. 16 MB splits give row-group-granular parallelism on
       // medium files and change nothing for files below the target (a
       // split can't be smaller than a row group either way). This is
-      // per-deployment tuning against file layout — overridable so a
-      // cluster with 128 MB row groups isn't pinned to 8x task counts.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
+      // per-deployment tuning against file layout: a cluster with 128 MB
+      // row groups should override it rather than run 8x task counts.
+      .config("spark.sql.files.maxPartitionBytes", "16m")
       // Partitioned-store reads (16-shard × bucket × origin layouts) list
       // 64-128 leaf dirs; above this threshold Spark launches a whole
       // distributed LISTING JOB (~0.2-1 s of fixed job overhead per read)
@@ -42,9 +41,8 @@ object Sessions {
       // 512 keeps every store read driver-side here; an object-store
       // deployment with tens of thousands of partition dirs should lower
       // it back toward the 32 default (remote listing IS worth a job
-      // there), hence the env override.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_JOB_THRESHOLD", "512"))
+      // there).
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
       // The generated-class cache defaults to 100 entries; a session
       // running the whole query registry produces several hundred
       // codegen units per pass, so every re-execution recompiles every
@@ -52,11 +50,9 @@ object Sessions {
       // generated classes are cache-hits). Static conf, driver-memory
       // bounded (generated classes are small); any long-lived
       // many-query session wants this, not just the bench.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "zstd"))
+      .config("spark.sql.parquet.compression.codec", "zstd")
       // Local-mode only: without libhadoop, every create/mkdirs on the
       // default local FS forks a `chmod` subprocess (10-25 ms each; a
       // 96-file dynamic-partition write pays hundreds). This impl skips
@@ -64,15 +60,16 @@ object Sessions {
       // (hdfs://, s3a://) are unaffected by fs.file.impl.
       .config("spark.hadoop.fs.file.impl", "graft.lake.FastLocalFileSystem")
       .config("spark.ui.enabled", "false")
-    // A/B experiment hook: arbitrary conf overrides without a code edit
-    // (e.g. SPARK_GRAFT_EXTRA_CONF="spark.graft.graph.localBytes=0" to
-    // force the distributed branch of an observed-small fast path for a
-    // before/after plan dump or a gate-crossover sweep). Applied LAST so
-    // they win over the defaults above; production deployments pass real
-    // conf files instead. Known limitation (debug hook, not a config
-    // surface): entries split on ';' with no escaping, so a conf VALUE
-    // containing a semicolon cannot be expressed here — it would split
-    // into a bogus entry and fail the key=value require below.
+    // A/B experiment hook and the override path for every default above
+    // (split size, listing threshold, codegen cache, codec): arbitrary conf
+    // overrides without a code edit (e.g. "spark.graft.localBytes=0" forces
+    // every distributed branch of the observed-small fast paths for a
+    // before/after plan dump). Applied LAST so they win over the defaults
+    // above; production deployments pass real conf files instead. Known
+    // limitation (debug hook, not a config surface): entries split on ';'
+    // with no escaping, so a conf VALUE containing a semicolon cannot be
+    // expressed here — it would split into a bogus entry and fail the
+    // key=value require below.
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
       .flatMap(_.split(';')).map(_.trim).filter(_.nonEmpty)
       .foreach { kv =>

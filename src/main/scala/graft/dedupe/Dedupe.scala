@@ -112,28 +112,11 @@ object Dedupe {
       maxBucket: Int = 10000): DataFrame = {
     val spark = banded.sparkSession
     import spark.implicits._
-    // a dropped bucket is never silent: the skip counters surface how
-    // many groups (and member rows) the cap discarded — see SkipStats
-    val (skB, skR) = graft.functions.SkipStats.pair(spark, "lsh")
+    val skips = graft.functions.Counters.skips(spark, "lsh")
     banded.select(col(idCol), col("band"), col("bucket")).as[(Long, Int, String)]
       .groupByKey { case (_, band, bucket) => (band, bucket) }
-      .flatMapGroups { (key: (Int, String), rows: Iterator[(Long, Int, String)]) =>
-        // take(cap+1) BEFORE toArray: an over-cap bucket is detected from
-        // the first cap+1 rows and never materialized in task memory —
-        // the remainder of the group iterator is only COUNTED, never
-        // stored (same bound as Xref.candidates /
-        // Similarity.nearDupPairs). A mega-bucket at 100 TB is a
-        // counted skip, not an OOM.
-        val ids = rows.map(_._1).take(maxBucket + 1).toArray
-        if (ids.length > maxBucket) {
-          var extra = 0L
-          rows.foreach(_ => extra += 1)
-          skB.add(1); skR.add(ids.length + extra)
-          System.err.println(s"[dedupe] LSH bucket band=${key._1} over cap " +
-            s"($maxBucket): ${ids.length + extra} rows skipped")
-          Iterator.empty
-        }
-        else {
+      .flatMapGroups { (_: (Int, String), rows: Iterator[(Long, Int, String)]) =>
+        skips.capped(rows.map(_._1), maxBucket) { ids =>
           java.util.Arrays.sort(ids)
           for {
             i <- ids.indices.iterator
@@ -225,7 +208,7 @@ object Dedupe {
       maxBucket: Int = 10000): DataFrame = {
     val spark = sig0.sparkSession
     import spark.implicits._
-    val (skB, skR) = graft.functions.SkipStats.pair(spark, "simhash")
+    val skips = graft.functions.Counters.skips(spark, "simhash")
     sig0.select(col(idCol).cast("long"), col("simhash"),
       explode(sequence(lit(0), lit(3))).as("__band"))
       .withColumn("__byte", expr("(simhash >> (__band * 8)) & 255"))
@@ -233,21 +216,7 @@ object Dedupe {
       .groupByKey { case (_, _, band, byte) => (band, byte) }
       .flatMapGroups { (key: (Int, Long), rows: Iterator[(Long, Long, Int, Long)]) =>
         val band = key._1
-        // bounded materialization: take(cap+1) detects an over-cap bucket
-        // from its first cap+1 rows without pulling the rest into memory
-        // (see bucketPairs) — a hot byte-bucket is a counted skip
-        // (SkipStats), never an OOM
-        val docs = rows.map(r => (r._1, r._2)).take(maxBucket + 1).toArray
-        if (docs.length > maxBucket) {
-          var extra = 0L
-          rows.foreach(_ => extra += 1)
-          skB.add(1); skR.add(docs.length + extra)
-          System.err.println(s"[dedupe] SimHash bucket band=$band " +
-            s"byte=${key._2} over cap ($maxBucket): " +
-            s"${docs.length + extra} rows skipped")
-          Iterator.empty
-        }
-        else {
+        skips.capped(rows.map(r => (r._1, r._2)), maxBucket) { docs =>
           java.util.Arrays.sort(docs,
             java.util.Comparator.comparingLong((p: (Long, Long)) => p._1))
           for {
@@ -468,22 +437,18 @@ object Dedupe {
     */
   def dupClusters(pairs: DataFrame, maxRounds: Int = 16,
       shortcutFrom: Int = 4, failOnNonConvergence: Boolean = true): DataFrame = {
-    import graft.functions.F
-    import graft.graph.{EntityGraph, GraphLocal}
+    import graft.functions.{F, LocalGate}
+    import graft.graph.GraphLocal
     // Observed-small fast path (the kCore precedent, EntityGraph.kCore's
-    // localPeel): when the pair table measures small — exact file bytes
-    // when it is a plain scan of a staged table, else the staged star's
-    // file size below; driver metadata either way, no extra job — the
+    // localPeel): when the pair table passes the LocalGate — as a plain
+    // scan of a staged table, else through the staged star below — the
     // whole label propagation loop (2 jobs per round: propagate +
     // shortcut-stage) collapses to ONE executor-local union-find task.
     // The output is the same fixpoint by construction: label = exact
     // component min under Spark's own ordering for the id type (longs
     // natural, strings unsigned UTF-8 bytes — UTF8String order; the
     // pairs' endpoints ARE the star's node set, so skipping the star
-    // write changes nothing). At 100 TB the pair graph dwarfs the
-    // threshold and the distributed loop below runs unchanged; the gate
-    // is data-size-adaptive, not core-count-tuned. Executor-local, not
-    // a driver collect.
+    // write changes nothing). Executor-local, not a driver collect.
     val nodeType = pairs.schema("id_a").dataType
     val ordOpt = GraphLocal.orderingFor(nodeType)
     def localCc(edgeRows: DataFrame): DataFrame = {
@@ -495,7 +460,7 @@ object Dedupe {
           org.apache.spark.sql.Encoders.row(outSchema))
     }
     if (ordOpt.isDefined && F.isPlainScan(pairs) &&
-        EntityGraph.smallEnoughForLocal(Seq(pairs)))
+        LocalGate.local("components", Seq(pairs)))
       return localCc(pairs.select(col("id_a"), col("id_b")))
     // the "star": both edge directions plus a self-loop per node. The
     // self-loop makes every round a single join + single aggregation — the
@@ -507,7 +472,7 @@ object Dedupe {
       undirected.select(col("src")).distinct().withColumn("dst", col("src"))))
     // non-scan inputs reach the same fast path through the staged star's
     // exact file size (one unavoidable stage write, then one local task)
-    if (ordOpt.isDefined && EntityGraph.smallEnoughForLocal(Seq(star)))
+    if (ordOpt.isDefined && LocalGate.local("components_star", Seq(star)))
       return localCc(star)
     // round 1 fused into initialization: label = min(self, neighbors)
     var labels = F.materialize(

@@ -1,5 +1,7 @@
 package graft.functions
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** Session-scoped stage cache: a WEAK-keyed outer map so a static cache
@@ -27,4 +29,9 @@ final class SessionScoped[V] {
     }
     m.computeIfAbsent(key, _ => make)
   }
+
+  /** Every entry built so far for this session. */
+  def entries(spark: SparkSession): Map[String, V] =
+    Option(maps.synchronized(maps.get(spark)))
+      .fold(Map.empty[String, V])(_.asScala.toMap)
 }

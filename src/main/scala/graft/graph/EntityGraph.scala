@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.F
+import graft.functions.{F, LocalGate}
 
 /** Entity-graph analytics over the statement lake's natural graph shape.
   *
@@ -27,35 +27,6 @@ import graft.functions.F
   * aggregate over E edges, both map-side-combinable.
   */
 object EntityGraph {
-
-  /** Size gate for the executor-local fast paths: every input's
-    * optimizer size estimate (for staged parquet / plain scans this is
-    * the actual file size — driver metadata, no job) must fit under
-    * `spark.graft.graph.localBytes` (default 32 MB ≈ 2-3M zstd edge
-    * rows, the same working-set band as kCore's 2M-edge gate). Non-scan
-    * inputs carry conservative (over-)estimates, so the gate fails
-    * safe toward the distributed path. At 100 TB the staged edge
-    * artifacts are orders of magnitude past the gate.
-    */
-  private[graft] def smallEnoughForLocal(inputs: Seq[DataFrame],
-      confKey: String = "spark.graft.graph.localBytes",
-      defaultBytes: Long = 32L << 20): Boolean = {
-    val conf = inputs.head.sparkSession.conf
-    val localBytes = conf.get(confKey,
-      conf.get("spark.graft.graph.localBytes", defaultBytes.toString)).toLong
-    inputs.forall(
-      _.queryExecution.optimizedPlan.stats.sizeInBytes <= localBytes)
-  }
-
-  /** The rank kernels do `iters×` more single-task work per edge than
-    * union-find/BFS, and the distributed iteration parallelizes that
-    * work well — measured crossover on this class of graph: local wins
-    * at ~2 MB of staged edges (1.0 s vs 1.6-3.0 s), loses 2× at ~30 MB
-    * (6.6 s vs 3.0 s at ×10). 8 MB keeps the win and cedes the loss;
-    * override via spark.graft.graph.localBytes.rank.
-    */
-  private val RankLocalKey = "spark.graft.graph.localBytes.rank"
-  private val RankLocalDefault = 8L << 20
 
   private def rankSchema(e0: DataFrame) =
     org.apache.spark.sql.types.StructType(Seq(
@@ -115,16 +86,14 @@ object EntityGraph {
     // staged file twice (cheap columnar read), and the staged bytes are
     // half of what writing the undirected table would cost.
     val e0 = F.materializeIfNeeded(edges)
-    // Observed-small fast path (kCore's localPeel precedent): when edges
-    // AND seeds measure small by driver-side file-size metadata, the
-    // whole per-hop loop (join + distinct + anti-join + stage write per
-    // hop) collapses to ONE executor-local BFS task over a tagged union
-    // of edge and seed rows — identical min-hop output by construction.
-    // At scale the byte gate fails and the staged frontier loop below
-    // runs unchanged.
+    // Observed-small fast path (kCore's localPeel precedent): past the
+    // LocalGate the whole per-hop loop (join + distinct + anti-join +
+    // stage write per hop) collapses to ONE executor-local BFS task over a
+    // tagged union of edge and seed rows — identical min-hop output by
+    // construction.
     val nodeType = e0.schema("src").dataType
-    if (smallEnoughForLocal(Seq(e0, seeds)) &&
-        GraphLocal.orderingFor(nodeType).isDefined) {
+    if (GraphLocal.orderingFor(nodeType).isDefined &&
+        LocalGate.local("expand", Seq(e0, seeds))) {
       val tagged = e0.select(col("src"), col("dst"), lit(false).as("__seed"))
         .unionAll(seeds.select(col("node").as("src"),
           lit(null).cast(nodeType).as("dst"), lit(true).as("__seed")))
@@ -190,11 +159,9 @@ object EntityGraph {
     // Observed-small fast path: the integer-exact recurrence (Long sums,
     // truncating division — associative, order-free) replays bit-identically
     // in one executor-local task, skipping the edgesDeg stage write and
-    // the per-iteration join chain (see GraphLocal.localPageRank). The
-    // byte gate is driver metadata on the staged/scanned file; at scale
-    // the distributed iteration below runs unchanged.
-    if (smallEnoughForLocal(Seq(e0), RankLocalKey, RankLocalDefault) &&
-        GraphLocal.orderingFor(e0.schema("src").dataType).isDefined) {
+    // the per-iteration join chain (see GraphLocal.localPageRank).
+    if (GraphLocal.orderingFor(e0.schema("src").dataType).isDefined &&
+        LocalGate.local("pagerank", Seq(e0), LocalGate.RankBytes)) {
       return e0.select(col("src"), col("dst")).coalesce(1)
         .mapPartitions(it => GraphLocal.localPageRank(it, iters, seeded = false))(
           org.apache.spark.sql.Encoders.row(rankSchema(e0)))
@@ -256,8 +223,8 @@ object EntityGraph {
     // set riding the same tagged union the BFS fast path uses (seeds
     // outside the node set drop out exactly like the distributed
     // node-set join)
-    if (smallEnoughForLocal(Seq(e0, seeds), RankLocalKey, RankLocalDefault) &&
-        GraphLocal.orderingFor(e0.schema("src").dataType).isDefined) {
+    if (GraphLocal.orderingFor(e0.schema("src").dataType).isDefined &&
+        LocalGate.local("ppr", Seq(e0, seeds), LocalGate.RankBytes)) {
       val nodeType = e0.schema("src").dataType
       val tagged = e0.select(col("src"), col("dst"), lit(false).as("__seed"))
         .unionAll(seeds.select(col("node").as("src"),

@@ -27,17 +27,14 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
   private val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
   val tags = new Tags(fs, root)
 
-  // phase timing for the optimization loop (SPARK_GRAFT_STORE_TIMING=1):
-  // separates the write jobs from the driver-side commit protocol
-  private val storeTiming = sys.env.contains("SPARK_GRAFT_STORE_TIMING")
-  private def timed[A](name: String)(body: => A): A =
-    if (!storeTiming) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(f"[store-timing] $name%-24s ${(System.nanoTime() - t0) / 1e9}%8.3fs")
-      r
-    }
+  // driver-side phase milliseconds (`store.<phase>_ms` in Counters):
+  // separates the write jobs from the commit protocol in a query profile
+  private def timed[A](phase: String)(body: => A): A = {
+    val t0 = System.nanoTime()
+    try body
+    finally graft.functions.Counters.acc(spark, s"store.${phase}_ms")
+      .add((System.nanoTime() - t0) / 1000000L)
+  }
 
   def version: Long = Manifest.currentVersion(fs, root)
 
@@ -175,7 +172,7 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
       .sortWithinPartitions((Statement.partitionColumns.map(col) ++ sortCols): _*)
       .write.partitionBy(Statement.partitionColumns: _*)
     compression.foreach(c => writer.option("compression", c))
-    timed("staged write job")(writer.mode("overwrite").parquet(stage.toString))
+    timed("write_job")(writer.mode("overwrite").parquet(stage.toString))
     val stageBase = stage.toUri.getPath.stripSuffix("/")
     val moves = scala.collection.mutable.ArrayBuffer.empty[(Path, Path, String)]
     val it = fs.listFiles(stage, true)
@@ -197,7 +194,7 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = FsOps.driverIoPool
-    timed("staged moves")(Await.result(
+    timed("staged_moves")(Await.result(
       Future.traverse(moves.toSeq) { case (src, dest, rel) =>
         Future {
           if (!FsOps.rename(fs, src, dest))
@@ -219,7 +216,7 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
     * time), merged with the carried-over files' existing entries so a
     * commit never degrades older files' skipping stats.
     */
-  private def statsFor(fresh: Set[String]): Map[String, Long] = timed("footer stats") {
+  private def statsFor(fresh: Set[String]): Map[String, Long] = timed("footer_stats") {
     val conf = spark.sessionState.newHadoopConf()
     // footer opens are independent driver-side IO — run them on a bounded
     // pool (serial opens dominate commit latency once a batch spans many
@@ -233,7 +230,7 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
       }, Duration.Inf).flatten.toMap
   }
 
-  def append(df: DataFrame): Long = timed("append lock+commit")(Locks.withLock(fs, root) {
+  def append(df: DataFrame): Long = timed("append")(Locks.withLock(fs, root) {
     val fresh = writeStaged(df,
       Statement.appendSortColumns.map(col) :+ col("last_seen").desc)
     // one dirty stamp per append (a batch file listing the touched
@@ -241,8 +238,8 @@ class StatementStore(val spark: SparkSession, val rootStr: String, val shards: I
     // that's one object-store PUT per commit instead of hundreds
     tags.put(s"dirty/${java.util.UUID.randomUUID().toString}",
       fresh.map(partitionOf).toSeq.sorted.mkString("\n"))
-    val (liveSet, liveStats) = timed("manifest liveState")(Manifest.liveState(fs, root))
-    timed("manifest commit")(Manifest.commit(fs, root, liveSet ++ fresh, "append",
+    val (liveSet, liveStats) = timed("manifest_live_state")(Manifest.liveState(fs, root))
+    timed("manifest_commit")(Manifest.commit(fs, root, liveSet ++ fresh, "append",
       liveStats ++ statsFor(fresh)))
   })
 

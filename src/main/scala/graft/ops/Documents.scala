@@ -366,22 +366,20 @@ object Documents {
     val lookup = parents.select(col("id").as("cursor"),
       col("name").as("__pname"), col("parent").as("__pparent"))
 
-    // Observed-small fast path (the graph operators' localBytes gate —
+    // Observed-small fast path (the graph operators' LocalGate —
     // same precedent as EntityGraph.expand): a document corpus's FOLDER
     // set is tiny even when the corpus is not, and the per-level staged
     // walk below pays 1-2 Spark jobs per directory level of pure fixed
-    // overhead. When the staged parents table measures small by
-    // driver-side file metadata (and all three columns are strings, so
-    // SQL equality/concat semantics map 1:1 onto the kernel), the whole
-    // ancestor closure collapses to ONE executor-local task
-    // (GraphLocal.localPaths — exact same fixpoint, spec-locked against
-    // the forced-distributed loop). The corpus-wide final join below is
-    // shared by both branches; at scale the byte gate fails and the
-    // staged loop runs unchanged.
+    // overhead. When the staged parents table passes the gate (and all
+    // three columns are strings, so SQL equality/concat semantics map 1:1
+    // onto the kernel), the whole ancestor closure collapses to ONE
+    // executor-local task (GraphLocal.localPaths — exact same fixpoint,
+    // spec-locked against the forced-distributed loop). The corpus-wide
+    // final join below is shared by both branches.
     val allStrings = Seq("id", "name", "parent").forall(
       parents.schema(_).dataType == org.apache.spark.sql.types.StringType)
     val ancLocal: Option[DataFrame] =
-      if (allStrings && graft.graph.EntityGraph.smallEnoughForLocal(Seq(parents))) {
+      if (allStrings && graft.functions.LocalGate.local("paths", Seq(parents))) {
         val outSchema = org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("id",
             org.apache.spark.sql.types.StringType),

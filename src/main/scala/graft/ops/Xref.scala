@@ -26,27 +26,14 @@ object Xref {
       maxBlock: Int = 100, minShared: Int = 2): DataFrame = {
     val spark = keys0.sparkSession
     import spark.implicits._
-    val (skB, skR) = graft.functions.SkipStats.pair(spark, "xref")
+    val skips = graft.functions.Counters.skips(spark, "xref")
     val keys = keys0
       .select(col(blockCol).cast("string"), col(idCol).cast("string"))
       .distinct()
     keys.as[(String, String)]
       .groupByKey(_._1)
-      .flatMapGroups { (block: String, rows: Iterator[(String, String)]) =>
-        // bound materialization BEFORE the cap check: a pathological
-        // mega-block (millions of ids behind one key) must not be pulled
-        // into task memory just to be dropped — take one past the cap,
-        // decide (counting the drop in SkipStats), and only then sort
-        val ids0 = rows.map(_._2).take(maxBlock + 1).toArray
-        if (ids0.length > maxBlock) {
-          var extra = 0L
-          rows.foreach(_ => extra += 1)
-          skB.add(1); skR.add(ids0.length + extra)
-          System.err.println(s"[xref] blocking key `$block` over cap " +
-            s"($maxBlock): ${ids0.length + extra} entities skipped")
-          Iterator.empty
-        }
-        else {
+      .flatMapGroups { (_: String, rows: Iterator[(String, String)]) =>
+        skips.capped(rows.map(_._2), maxBlock) { ids0 =>
           val ids = ids0.sorted
           for {
             i <- ids.indices.iterator

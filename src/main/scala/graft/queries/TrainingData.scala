@@ -571,14 +571,12 @@ object TrainingData {
     val t0 = posTokens(spark, dir)
     // Observed-small fast path (the GraphLocal precedent): greedy BPE is
     // inherently sequential per document, so when the staged token table
-    // measures small (exact file bytes — driver metadata, no job) BOTH
-    // rounds run as ONE executor-local task over interned-int token
-    // arrays ([[graft.text.Bpe.localSummary]] — exactness argument and
-    // the parity-rule equivalence there; locked by a forced-distributed
-    // spec and the tok2 oracle). At 100 TB the token stream dwarfs the
-    // gate and the staged rounds below run unchanged.
-    if (F.isPlainScan(t0) && graft.graph.EntityGraph.smallEnoughForLocal(
-        Seq(t0), "spark.graft.text.localBytes", 32L << 20)) {
+    // passes the gate BOTH rounds run as ONE executor-local task over
+    // interned-int token arrays ([[graft.text.Bpe.localSummary]] —
+    // exactness argument and the parity-rule equivalence there; locked by
+    // a forced-distributed spec and the tok2 oracle). posTokens' pos is
+    // posexplode's index + 1, never null, as localSummary requires.
+    if (F.isPlainScan(t0) && graft.functions.LocalGate.local("bpe", Seq(t0))) {
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("round",
           org.apache.spark.sql.types.IntegerType, nullable = false),

@@ -362,10 +362,9 @@ object Similarity {
     */
   /** Per-block size cap for the pair loops: a block past this is
     * degenerate (a mega-cluster of near-identical vectors) and is dropped
-    * rather than exploded — the same signal-free-hot-block policy as the
-    * LSH 10k bucket cap and xref's maxBlock. The take(cap+1) bound means
-    * an over-cap block never materializes in task memory just to be
-    * discarded.
+    * rather than exploded — the same signal-free-hot-block policy
+    * (`Counters.Skips.capped`) as the LSH 10k bucket cap and xref's
+    * maxBlock.
     */
   val DefaultMaxBlock = 100000
 
@@ -373,7 +372,7 @@ object Similarity {
       threshold: Double, maxBlock: Int = DefaultMaxBlock): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val (skB, skR) = graft.functions.SkipStats.pair(spark, "embed")
+    val skips = graft.functions.Counters.skips(spark, "embed")
     val p = prepared(emb, idCol).select(
       col(blockCol).cast("int").as("block"),
       col(idCol).cast("long").as("id"),
@@ -385,18 +384,7 @@ object Similarity {
       .as[(Int, Long, Array[Long], Long)]
     p.groupByKey(_._1)
       .flatMapGroups { (block, rows) =>
-        val vs0 = rows.take(maxBlock + 1).toArray
-        if (vs0.length > maxBlock) {
-          // counted, never silent (SkipStats): a degenerate mega-block
-          // capping recall must leave a trace in the run's metrics
-          var extra = 0L
-          rows.foreach(_ => extra += 1)
-          skB.add(1); skR.add(vs0.length + extra)
-          System.err.println(s"[similarity] block $block over cap " +
-            s"($maxBlock): ${vs0.length + extra} rows skipped")
-          Iterator.empty
-        }
-        else {
+        skips.capped(rows, maxBlock) { vs0 =>
           val vs = vs0.sortBy(_._2)
           for {
             i <- vs.indices.iterator
@@ -439,23 +427,14 @@ object Similarity {
     // than exploding O(n²) in one task — at scale, size `nlist` so the
     // expected cluster is far below the cap; a cap-breaching cluster is a
     // quantizer-degeneracy signal, not a workload, and it is COUNTED
-    // (SkipStats "semdedup") so the degeneracy is visible in metrics
-    val (skB, skR) = graft.functions.SkipStats.pair(spark, "semdedup")
+    // (Counters "semdedup") so the degeneracy is visible in metrics
+    val skips = graft.functions.Counters.skips(spark, "semdedup")
     val dropped = assigned.select(
       col("__cid").cast("int"), col(idCol).cast("long"), col("__q"), col("__n"))
       .as[(Int, Long, Array[Long], Long)]
       .groupByKey(_._1)
-      .flatMapGroups { (cid, rows) =>
-        val vs0 = rows.take(DefaultMaxBlock + 1).toArray
-        if (vs0.length > DefaultMaxBlock) {
-          var extra = 0L
-          rows.foreach(_ => extra += 1)
-          skB.add(1); skR.add(vs0.length + extra)
-          System.err.println(s"[similarity] semdedup cluster $cid over cap " +
-            s"($DefaultMaxBlock): prune skipped, all kept")
-          Iterator.empty
-        }
-        else {
+      .flatMapGroups { (_, rows) =>
+        skips.capped(rows, DefaultMaxBlock) { vs0 =>
           val vs = vs0.sortBy(_._2)
           for {
             j <- vs.indices.iterator

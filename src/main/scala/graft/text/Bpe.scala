@@ -147,6 +147,7 @@ object Bpe {
     val byDoc = new java.util.LinkedHashMap[Any, mutable.ArrayBuffer[(Int, Int)]]()
     rows.foreach { r =>
       val doc = r.get(0)
+      require(!r.isNullAt(1), s"Bpe.localSummary: null pos in doc $doc")
       val pos = r.getInt(1)
       val w = if (r.isNullAt(2)) null else r.getString(2)
       var buf = byDoc.get(doc)

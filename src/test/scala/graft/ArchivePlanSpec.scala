@@ -237,18 +237,9 @@ class ArchivePlanSpec extends SparkSpec {
       .resolvePaths(nodes, maxDepth)
       .collect().map(r => (r.getString(0), Option(r.getString(1)))).toSeq
       .groupBy(identity).view.mapValues(_.size).toMap // multiset compare
-    // restore the EXACT pre-test conf (unset if absent): suites share one
-    // JVM-wide session, so restoring a hard-coded default could clobber a
-    // concurrent suite's override
-    val prevGate = spark.conf.getOption("spark.graft.graph.localBytes")
-    def restoreGate(): Unit = prevGate match {
-      case Some(v) => spark.conf.set("spark.graft.graph.localBytes", v)
-      case None => spark.conf.unset("spark.graft.graph.localBytes")
-    }
     for (d <- Seq(4, 8, 32)) {
       val local = run(d)
-      spark.conf.set("spark.graft.graph.localBytes", "0")
-      val dist = try run(d) finally restoreGate()
+      val dist = forcedDistributed(run(d))
       assert(local === dist, s"maxDepth=$d")
     }
   }

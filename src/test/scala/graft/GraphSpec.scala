@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.functions.{Counters, LocalGate}
 import graft.graph.EntityGraph
 
 /** Entity-graph analytics: degree, bounded-hop expand (min-hop BFS),
@@ -144,15 +145,6 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  // force the distributed branch of the observed-small fast paths by
-  // zeroing the byte gate, restore after — the local/distributed pairs
-  // must agree bit for bit (GraphLocal's contract)
-  private def forcedDistributed[A](body: => A): A = {
-    spark.conf.set("spark.graft.graph.localBytes", "0")
-    try body finally spark.conf.set("spark.graft.graph.localBytes",
-      (32L << 20).toString)
-  }
-
   private def pseudoRandomEdges(n: Int, nodes: Int, seed: Int = 7) = {
     val rnd = new scala.util.Random(seed)
     (1 to n).map { _ =>
@@ -177,13 +169,31 @@ class GraphSpec extends SparkSpec {
     val seeds = Seq("n3", "n44", "n999").toDF("node") // n999 outside graph
     def m(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def decisions = Seq("local", "distributed")
+      .map(d => Counters.value(spark, s"gate.pagerank.$d"))
+    val before = decisions
     val prLocal = m(EntityGraph.pageRank(e, iters = 3))
     val prDist = forcedDistributed(m(EntityGraph.pageRank(e, iters = 3)))
     assert(prLocal === prDist)
+    // each branch's gate decision is counted
+    assert(decisions === before.map(_ + 1))
     val pprLocal = m(EntityGraph.personalizedPageRank(e, seeds, iters = 3))
     val pprDist =
       forcedDistributed(m(EntityGraph.personalizedPageRank(e, seeds, iters = 3)))
     assert(pprLocal === pprDist)
+  }
+
+  test("LocalGate: the conf key only lowers a site's limit") {
+    // a 16 MB optimizer estimate (2M longs): between the 8 MB rank limit
+    // and the 32 MB default
+    val mid = spark.range(2L << 20).toDF()
+    val est = mid.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(est > LocalGate.RankBytes && est < LocalGate.DefaultBytes, est)
+    withLocalBytes(32L << 20) {
+      assert(!LocalGate.local("pagerank", Seq(mid), LocalGate.RankBytes))
+      assert(LocalGate.local("expand", Seq(mid)))
+    }
+    withLocalBytes(4L << 20)(assert(!LocalGate.local("expand", Seq(mid))))
   }
 
   test("dupClusters local union-find == forced-distributed propagation") {

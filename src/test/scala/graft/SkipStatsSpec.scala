@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.SkipStats
+import graft.functions.Counters
 
 /** The no-silent-caps contract (SURVEY §8): every capped in-task pair
   * loop counts what its oversize-bucket policy drops. Each case feeds a
@@ -15,11 +15,11 @@ class SkipStatsSpec extends SparkSpec {
   import spark.implicits._
 
   private def delta(op: String)(body: => Unit): (Long, Long) = {
-    val b0 = SkipStats.value(spark, s"$op.skipped_buckets")
-    val r0 = SkipStats.value(spark, s"$op.skipped_rows")
+    val b0 = Counters.value(spark, s"$op.skipped_buckets")
+    val r0 = Counters.value(spark, s"$op.skipped_rows")
     body
-    (SkipStats.value(spark, s"$op.skipped_buckets") - b0,
-      SkipStats.value(spark, s"$op.skipped_rows") - r0)
+    (Counters.value(spark, s"$op.skipped_buckets") - b0,
+      Counters.value(spark, s"$op.skipped_rows") - r0)
   }
 
   test("LSH mega-bucket skips are counted (buckets and member rows)") {
@@ -80,5 +80,17 @@ class SkipStatsSpec extends SparkSpec {
       assert(pairs.count() == 0)
     }
     assert(db == 1 && dr == 5, s"got ($db, $dr)")
+
+    // semdedup: one IVF cluster (nlist = 1) one past the fixed block cap
+    // skips its prune, so every vector is kept
+    val n = graft.similarity.Similarity.DefaultMaxBlock + 1L
+    val big = spark.range(n).toDF("id")
+      .withColumn("embedding", array(lit(1.0f), lit(0.0f)))
+    val (sb, sr) = delta("semdedup") {
+      val out = graft.similarity.Similarity.semanticDedup(
+        big, "id", nlist = 1, threshold = 0.9)
+      assert(out.filter(!col("keep")).count() == 0)
+    }
+    assert(sb == 1 && sr == n, s"got ($sb, $sr)")
   }
 }

@@ -283,8 +283,7 @@ class TrainingDataSpec extends SparkSpec {
     // the cap/convergence surface belongs to the DISTRIBUTED branch (the
     // observed-small local union-find always converges) — force it by
     // zeroing the fast-path byte gate
-    spark.conf.set("spark.graft.graph.localBytes", "0")
-    try {
+    forcedDistributed {
       val distGot = Dedupe.dupClusters(chain).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(distGot === got) // the two branches agree at the fixpoint
@@ -298,8 +297,7 @@ class TrainingDataSpec extends SparkSpec {
         failOnNonConvergence = false).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(partial(40L) > 0L) // far end provably not yet at the fixpoint
-    } finally spark.conf.set("spark.graft.graph.localBytes",
-      (32L << 20).toString)
+    }
   }
 
   test("TokenHash: fused kernel equals the conv(substring(md5)) recipe on both eval paths") {
@@ -867,6 +865,10 @@ class TrainingDataSpec extends SparkSpec {
     // multi-doc mixed: out-of-order pos ingestion, '+'-bearing tokens
     check(Seq((3L, 2, "q"), (3L, 1, "p+r"), (3L, 3, "q"), (3L, 4, "q"),
       (7L, 1, "p+r"), (7L, 2, "q"), (9L, 1, "lone")))
+    // input contract: a null pos is rejected by name, not read as 0
+    val nullPos = intercept[IllegalArgumentException](graft.text.Bpe.localSummary(
+      Iterator(org.apache.spark.sql.Row(1L, null, "a")), 2))
+    assert(nullPos.getMessage.contains("null pos"), nullPos.getMessage)
   }
 
   test("MediaDecode: real PCM/BMP decode on hand-built byte fixtures") {

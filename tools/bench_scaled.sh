@@ -108,13 +108,13 @@ out = {
         'signal; cross-round ratio deltas must still be read against '
         'the calibrations, not at face value.'),
     'split_size_note': (
-        'maxPartitionBytes A/B (round 11, SPARK_GRAFT_MAX_PARTITION_BYTES '
+        'maxPartitionBytes A/B (round 11, spark.sql.files.maxPartitionBytes '
         'override): full 142-query suite at sf0.1 = 97.9 s (16m) vs 93.1 s '
         '(128m); six x100 heavies = 71.9 s (16m) vs 68.2 s (128m). Both '
         'deltas sit inside the measured host noise band (+/-10%, oracle '
         'spread 65-82 s across idle runs), so the 16m default is kept for '
         'row-group-granular parallelism on medium single-file scans; real '
-        'deployments tune via the env override.'),
+        'deployments tune via SPARK_GRAFT_EXTRA_CONF or their conf files.'),
     'streaming_drain_note': (
         'st5/sk3 are streaming drains whose batch twins (rj1/aj1, sk1) '
         'are IN this query set, so the parity claim is measured per '
